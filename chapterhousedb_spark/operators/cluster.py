@@ -7,28 +7,35 @@ survivor is kept per group. This module turns an edge list into
 (id, component) labels with component = min id in the component, the
 standard canonical-survivor convention.
 
-Algorithm: iterative min-label propagation. Every round each node takes
-the min of its own label and its neighbors' labels; converged when no
-label changes. Rounds needed = graph diameter, and near-dup graphs are
-dense clumps with tiny diameter (a dup cluster is near-clique shaped),
-so 2-4 rounds is typical regardless of corpus size.
+Scale-adaptive solve (one place for every entry point): the projected
+edges plus the node ids, as (id, id) rows, are checkpointed once and
+collected in ONE capped `limit(cap + 1)` action. At or under
+`_LOCAL_MAX_ROWS` rows the graph is solved on the driver by a numpy
+union-find and returned as one local frame — a near-dup graph of a few
+hundred edges costs one collect instead of a Spark job per round, whose
+per-job constants dominate at that size. Over the cap the checkpointed
+rows feed one of the two distributed solvers below, so the pair plan
+upstream runs once either way; `max_iters` only bounds those solvers.
 
-Scale shape (per round): one equi-join of labels against the symmetric
-edge list keyed on node id, one min-aggregate — both shuffle on node
-id, both benefit from map-side partial aggregation. Nothing is
-collected to the driver; convergence is detected with a 1-row
-aggregate. `localCheckpoint` after every round truncates lineage so
-the plan stays O(1) deep instead of growing per iteration (an
-un-checkpointed iterative join would hand Catalyst an exponentially
-nested plan). For adversarial graphs with large diameter (long chains,
-not dup-shaped), `connected_components_star` implements the published
-alternating large-star/small-star construction (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14), which
+Distributed solver 1, iterative min-label propagation: every round each
+node takes the min of its own label and its neighbors' labels;
+converged when no label changes. Rounds needed = graph diameter, and
+near-dup graphs are dense clumps with tiny diameter (a dup cluster is
+near-clique shaped), so 2-4 rounds is typical regardless of corpus size.
+Per round: one equi-join of labels against the symmetric edge list
+keyed on node id, one min-aggregate — both shuffle on node id, both
+benefit from map-side partial aggregation. Convergence is detected with
+a 1-row aggregate. `localCheckpoint` after every round truncates
+lineage so the plan stays O(1) deep instead of growing per iteration
+(an un-checkpointed iterative join would hand Catalyst an exponentially
+nested plan).
+
+Distributed solver 2, for adversarial graphs with large diameter (long
+chains, not dup-shaped): `connected_components_star` implements the
+published alternating large-star/small-star construction (Kiveris et
+al., "Connected Components in MapReduce and Beyond", SoCC'14), which
 converges in O(log^2 n) rounds regardless of diameter — same
 interface, same (id, min-id component) output, equality test-pinned.
-Near-dup clustering keeps the simpler propagation as the default (a
-dup cluster is near-clique shaped; 2-4 rounds beat the star rewrite's
-per-round constant), switching when diameter is the risk.
 
 Reference parity note: the reference engine (ChapterhouseDB) has no
 clustering operator — this is part of the beyond-reference
@@ -37,9 +44,16 @@ training-data surface (SURVEY.md §7.3.6).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+# Edges plus node ids solved on the driver; above it the distributed
+# solvers run. 1M rows (~16 MB of longs) covers every sf0.1 graph.
+_LOCAL_MAX_ROWS = 1 << 20
 
 
 def connected_components(
@@ -54,48 +68,174 @@ def connected_components(
 ) -> DataFrame:
     """(id, component) labels; component = min node id in the component.
 
-    edges: undirected pairs (any orientation, duplicates fine).
+    edges: undirected pairs (any orientation, duplicates fine); pairs
+    with a null endpoint are dropped.
     nodes: optional 1-column frame of ALL node ids — pass it to also
     label isolated nodes (singleton components), e.g. every document in
     a corpus, not only those appearing in some pair.
 
-    algorithm: "label" (default — min-label propagation, diameter
-    rounds, the cheap choice for near-clique dedup graphs) or "star"
-    (delegates to connected_components_star: O(log^2 n) rounds for
+    Graphs of at most `_LOCAL_MAX_ROWS` edges + nodes are solved on the
+    driver (module docstring); larger ones by the distributed solver
+    that `algorithm` names: "label" (default — min-label propagation,
+    diameter rounds, the cheap choice for near-clique dedup graphs) or
+    "star" (connected_components_star: O(log^2 n) rounds for
     chain-shaped graphs). Identical output either way (test-pinned),
-    so callers switch solvers without changing call sites.
+    so callers switch solvers without changing call sites. The one
+    difference: with nodes=None, a node whose only edges are
+    self-loops is labeled by "label" and dropped by "star".
 
-    max_iters: None (default) resolves per-algorithm — 30 propagation
-    rounds for "label", 50 alternating rounds for "star" (ADVICE r10:
-    forwarding the label default silently tightened the star solver's
-    documented budget for callers switching via the kwarg).
+    max_iters: rounds budget of the distributed solver; None resolves
+    per-algorithm — 30 propagation rounds for "label", 50 alternating
+    rounds for "star" (ADVICE r10: forwarding the label default
+    silently tightened the star solver's documented budget for callers
+    switching via the kwarg).
+    """
+    if algorithm not in ("label", "star"):
+        raise ValueError(
+            f"algorithm must be 'label' or 'star', got {algorithm!r}"
+        )
+    star = algorithm == "star"
+    e = edges.select(
+        F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
+    ).where(F.col("s").isNotNull() & F.col("d").isNotNull())
+    if star or nodes is not None:
+        # self-loops connect nothing; only "label" without a node frame
+        # keeps them, as the declaration of their node
+        e = e.where(F.col("s") != F.col("d"))
+    if nodes is not None:
+        node = F.col(nodes.columns[0]).cast("long")
+        e = e.unionByName(nodes.select(node.alias("s"), node.alias("d")))
+    # ONE checkpoint of the edges and the (id, id) node rows before the
+    # capped collect: over the cap the distributed solver reads these
+    # blocks instead of re-running the pair plan
+    rows = e.localCheckpoint(eager=False)
+    labels = _solve_on_driver(rows, nodes is not None, star)
+    if labels is None:
+        node_ids = None
+        if nodes is not None:
+            is_node = F.col("s").eqNullSafe(F.col("d"))
+            node_ids = rows.where(is_node).select(F.col("s").alias("id"))
+            rows = rows.where(~is_node)
+        if max_iters is None:
+            max_iters = 50 if star else 30
+        solve = _star_rounds if star else _label_rounds
+        labels = solve(rows, node_ids, max_iters)
+    return labels.select(
+        F.col("id").alias(id_col), F.col("comp").alias(component_col)
+    )
+
+
+def connected_components_star(
+    edges: DataFrame,
+    src: str = "id_a",
+    dst: str = "id_b",
+    nodes: DataFrame | None = None,
+    id_col: str = "id",
+    component_col: str = "component",
+    max_iters: int = 50,
+) -> DataFrame:
+    """Alternating large-star/small-star connected components (Kiveris
+    et al., SoCC'14) — the documented escape hatch for CHAIN-shaped
+    graphs (VERDICT r9 #7): same interface and same (id, component =
+    min member id) output as `connected_components`, but convergence
+    is O(log^2 n) ROUNDS regardless of graph diameter, where min-label
+    propagation needs diameter rounds (a 512-node path: 10 alternating
+    rounds vs 511 propagation rounds — test-pinned). Self-loops are
+    dropped, not componentized. Small graphs take the same driver path
+    as `connected_components` (module docstring)."""
+    return connected_components(
+        edges, src, dst, nodes, id_col, component_col, max_iters, "star"
+    )
+
+
+def _solve_on_driver(
+    rows: DataFrame, has_nodes: bool, star: bool
+) -> DataFrame | None:
+    """(id, comp) labels as one local frame, or None over the cap.
+
+    One action collects `rows`: the (s, d) edges and, with a node frame,
+    the node ids as (id, id) self-rows — self-loop edges are dropped
+    then, so s == d marks exactly the node rows. The output replays
+    each distributed solver's node set: "label" labels every member of
+    a component holding a node, with the min node id; "star" labels
+    every non-root edge endpoint plus every node. Under the documented
+    contract (nodes covers every endpoint) both are the min-id labeling
+    of all nodes."""
+    t = rows.limit(_LOCAL_MAX_ROWS + 1).toArrow()
+    if t.num_rows > _LOCAL_MAX_ROWS:
+        return None
+    # edges are null-free, so a null row is a null node id; both
+    # distributed solvers label it (null, null)
+    null_node = t.column("s").null_count > 0
+    t = t.filter(pc.is_valid(t.column("s")))
+    s = t.column("s").to_numpy()
+    d = t.column("d").to_numpy()
+    ids, inv = np.unique(np.concatenate([s, d]), return_inverse=True)
+    u, v = inv[: len(s)], inv[len(s) :]
+    n = len(ids)
+    root = _min_roots(n, u, v)
+    if has_nodes:
+        is_node = np.zeros(n, dtype=bool)
+        is_node[u[u == v]] = True
+    else:
+        is_node = np.ones(n, dtype=bool)
+    if star:
+        keep = is_node | (root != np.arange(n))
+        comp = root
+    else:
+        # min node index per component; n marks a component without one
+        first = np.full(n, n)
+        np.minimum.at(first, root[is_node], np.flatnonzero(is_node))
+        comp = first[root]
+        keep = comp < n
+    out_id = pa.array(ids[keep], pa.int64())
+    out_comp = pa.array(ids[comp[keep]], pa.int64())
+    if null_node:
+        out_id = pa.concat_arrays([out_id, pa.nulls(1, pa.int64())])
+        out_comp = pa.concat_arrays([out_comp, pa.nulls(1, pa.int64())])
+    return rows.sparkSession.createDataFrame(
+        pa.table({"id": out_id, "comp": out_comp})
+    )
+
+
+def _min_roots(n: int, u: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Union-find over n nodes and the edges (u[i], v[i]), vectorized:
+    every root hooks onto the smallest root it shares an edge with
+    (min-root union), then pointer jumping halves every path at once
+    until each node points at its root; repeat until no edge joins two
+    roots. Pointers only ever go to smaller indices, so the forest is
+    acyclic and each component's root is its min index; every round
+    hooks at least one root, so it terminates."""
+    parent = np.arange(n)
+    while True:
+        ru, rv = parent[u], parent[v]
+        cross = ru != rv
+        if not cross.any():
+            return parent
+        np.minimum.at(
+            parent,
+            np.maximum(ru[cross], rv[cross]),
+            np.minimum(ru[cross], rv[cross]),
+        )
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
+def _label_rounds(
+    e: DataFrame, node_ids: DataFrame | None, max_iters: int
+) -> DataFrame:
+    """Distributed min-label propagation over the (s, d) edges; node_ids
+    (column id) defaults to every endpoint.
 
     Monotone convergence: labels only ever decrease, so the global
     label sum strictly decreases every non-converged round — one cheap
     1-row aggregate per round detects the fixpoint without a join.
     """
-    if algorithm == "star":
-        return connected_components_star(
-            edges,
-            src,
-            dst,
-            nodes,
-            id_col,
-            component_col,
-            50 if max_iters is None else max_iters,
-        )
-    if algorithm != "label":
-        raise ValueError(
-            f"algorithm must be 'label' or 'star', got {algorithm!r}"
-        )
-    if max_iters is None:
-        max_iters = 30
-    e = edges.select(
-        F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
-    )
     # symmetrize in ONE pass over the edge source (union of e with its
-    # flip would consume the upstream plan twice — expensive when edges
-    # come straight out of a near-dup pair join)
+    # flip would consume the upstream plan twice)
     sym = e.select(
         F.explode(
             F.array(
@@ -110,10 +250,8 @@ def connected_components(
     # list once per round
     sym = sym.repartition("d").persist(StorageLevel.MEMORY_AND_DISK)
 
-    if nodes is None:
+    if node_ids is None:
         node_ids = sym.select(F.col("s").alias("id")).distinct()
-    else:
-        node_ids = nodes.select(F.col(nodes.columns[0]).cast("long").alias("id"))
 
     # LAZY localCheckpoint: the convergence aggregate right below is the
     # round's ONLY action — it computes every partition (a global sum),
@@ -148,27 +286,15 @@ def connected_components(
         )
 
     sym.unpersist()
-    return labels.select(
-        F.col("id").alias(id_col), F.col("comp").alias(component_col)
-    )
+    return labels
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    nodes: DataFrame | None = None,
-    id_col: str = "id",
-    component_col: str = "component",
-    max_iters: int = 50,
+def _star_rounds(
+    e: DataFrame, node_ids: DataFrame | None, max_iters: int
 ) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al., SoCC'14) — the documented escape hatch for CHAIN-shaped
-    graphs (VERDICT r9 #7): same interface and same (id, component =
-    min member id) output as `connected_components`, but convergence
-    is O(log^2 n) ROUNDS regardless of graph diameter, where min-label
-    propagation needs diameter rounds (a 512-node path: 10 alternating
-    rounds vs 511 propagation rounds — test-pinned).
+    """Distributed large-star/small-star rounds over the (s, d) edges
+    (self-loops already dropped); node_ids (column id) defaults to every
+    endpoint.
 
     Per round (both stars are one groupBy + one join keyed on node id,
     map-side-combinable, nothing collected):
@@ -186,28 +312,15 @@ def connected_components_star(
 
     Trade-off vs min-label: ~2x the shuffles per round and a distinct
     per star, so on near-clique dedup graphs (diameter 2-4) the
-    default wins; on adversarial components (linked lists of
+    propagation wins; on adversarial components (linked lists of
     paraphrase chains, web-graph tails) this is the difference between
     10 rounds and thousands."""
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("u"),
-            F.col(dst).cast("long").alias("v"),
+    e = e.select(F.col("s").alias("u"), F.col("d").alias("v"))
+    if node_ids is None:
+        node_ids = e.select(F.col("u").alias("id")).union(
+            e.select(F.col("v").alias("id"))
         )
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-    )
-    if nodes is None:
-        node_ids = (
-            e.select(F.col("u").alias("id"))
-            .union(e.select(F.col("v").alias("id")))
-            .distinct()
-        )
-    else:
-        node_ids = (
-            nodes.select(F.col(nodes.columns[0]).cast("long").alias("id"))
-            .distinct()
-        )
+    node_ids = node_ids.distinct()
 
     # lazy checkpoint: _sig's count+hash aggregate computes every
     # partition, materializing the checkpoint in the same job (one job
@@ -284,9 +397,7 @@ def connected_components_star(
     singletons = node_ids.join(
         member_labels.select("id"), "id", "left_anti"
     ).select("id", F.col("id").alias("comp"))
-    return member_labels.unionByName(singletons).select(
-        F.col("id").alias(id_col), F.col("comp").alias(component_col)
-    )
+    return member_labels.unionByName(singletons)
 
 
 def components_update(
@@ -320,7 +431,8 @@ def components_update(
 
     At 100 TB: one semi-join finds touched components (shuffle keyed
     on id), one join keyed on component pulls their members, and the
-    propagation loop runs on the small slice; the untouched label mass
+    solve runs on the small slice (on the driver while it fits under
+    the cap); the untouched label mass
     is a single anti-join pass-through with no propagation rounds.
     Labels only ever DECREASE (new mins can only merge components), so
     repeated batch folds converge exactly like the batch solver.
@@ -329,10 +441,13 @@ def components_update(
         F.col(id_col).cast("long").alias("id"),
         F.col(component_col).cast("long").alias("comp"),
     )
+    # checkpoint the batch edges: the solve, the touched-component
+    # lookup and the untouched pass-through all read them, and they
+    # usually come straight out of a near-dup pair plan
     e = new_edges.select(
         F.col(src).cast("long").alias("id_a"),
         F.col(dst).cast("long").alias("id_b"),
-    )
+    ).localCheckpoint(eager=False)
     endpoints = (
         e.select(F.col("id_a").alias("id"))
         .union(e.select(F.col("id_b").alias("id")))

@@ -61,22 +61,22 @@ def fan_out(df: DataFrame, key: str = "doc_id") -> DataFrame:
     Probe cost (r16, VERDICT r15 minor #5): `df.rdd` builds a full
     Python-wrapped RDD per call (~130-190 ms); the JVM-side
     `queryExecution().toRdd()` plans the same physical RDD without the
-    Python serializer wrapper (~60 ms), and the (key, result) pair is
-    memoized ON the input DataFrame — every call site passes the
+    Python serializer wrapper (~60 ms), and the result is memoized ON
+    the input DataFrame, keyed by `key` — every call site passes the
     session-memoized `load()` frame, so each (table, key) pays the
     probe once per session instead of once per query. A DataFrame is
     an immutable lazy plan, so handing back the same fanned-out plan
     changes nothing downstream."""
-    cached = getattr(df, "_chdb_fan_out", None)
-    if cached is not None and cached[0] == key:
-        return cached[1]
+    memo = df.__dict__.setdefault("_chdb_fan_out", {})
+    if key in memo:
+        return memo[key]
     sc = df.sparkSession.sparkContext
     p = sc.defaultParallelism
     if df._jdf.queryExecution().toRdd().getNumPartitions() >= p:
         out = df
     else:
         out = df.repartition(p, key)
-    df._chdb_fan_out = (key, out)
+    memo[key] = out
     return out
 
 
@@ -128,21 +128,23 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     raw microsecond value and hash-matches DuckDB, which reads the
     same file as a naive TIMESTAMP.
     """
-    with _LOAD_MEMO_LOCK:
-        memo = _LOAD_MEMO.setdefault(spark, {})
-        cached = memo.get((sf_dir, table))
-    if cached is not None:
-        return cached
     if table == "events":
-        # Defensive: the correctness harness builds its own plain
-        # SparkSession where build_session()'s conf is absent; without
-        # this, reading TIMESTAMP(NANOS) throws PARQUET_TYPE_ILLEGAL.
+        # Defensive, and on memo hits too (the conf may have changed
+        # since the first load): the correctness harness builds its own
+        # plain SparkSession where build_session()'s conf is absent;
+        # without this, reading TIMESTAMP(NANOS) throws
+        # PARQUET_TYPE_ILLEGAL.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Same defense for the timezone: the NTZ->LTZ cast below and
         # every downstream unix_timestamp/date_trunc interpret wall
         # clocks in the SESSION zone; DuckDB reads the file naive. Only
         # UTC makes them agree, so don't inherit the harness JVM's zone.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+    with _LOAD_MEMO_LOCK:
+        memo = _LOAD_MEMO.setdefault(spark, {})
+        cached = memo.get((sf_dir, table))
+    if cached is not None:
+        return cached
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     if table == "events":
         from pyspark.sql import functions as F

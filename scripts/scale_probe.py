@@ -240,9 +240,7 @@ def probe(spark, docs, embs) -> dict:
     # here because the dup-shaped graphs above never exercise depth.
     from pyspark.sql.window import Window
 
-    from chapterhousedb_spark.operators.cluster import (
-        connected_components_star,
-    )
+    from chapterhousedb_spark.operators import cluster
 
     # round-10: document-integrity packing — the BFD pass sees (id,
     # length) pairs only, so rows == docs and wall tracks the word
@@ -258,11 +256,17 @@ def probe(spark, docs, embs) -> dict:
     ).filter(F.col("id_b").isNotNull())
     # the star loop runs EAGERLY inside the call (localCheckpoint per
     # round), so time construction + count together, and assert the
-    # chain actually collapsed to ONE component (the adversarial case)
+    # chain actually collapsed to ONE component (the adversarial case).
+    # The probe measures the distributed rounds, so the cap is forced
+    # to 0: a chain this size would otherwise be solved on the driver.
     t0 = _time.perf_counter()
-    lab = connected_components_star(chain)
-    n_comp = lab.select("component").distinct().count()
-    n = lab.count()
+    cap, cluster._LOCAL_MAX_ROWS = cluster._LOCAL_MAX_ROWS, 0
+    try:
+        lab = cluster.connected_components_star(chain)
+        n_comp = lab.select("component").distinct().count()
+        n = lab.count()
+    finally:
+        cluster._LOCAL_MAX_ROWS = cap
     out["star_chain_rows"] = n
     out["star_chain_rows_sec"] = round(_time.perf_counter() - t0, 3)
     out["star_chain_components"] = n_comp

@@ -555,7 +555,14 @@ def test_knn_graph_plan_shape(spark):
 
 
 def test_embedding_clusters_plan_shape(spark):
-    plan = physical_plan(q("embedding_clusters", spark))
+    """embedding_clusters solves its small graph on the driver, so its
+    result plan is a local scan; the shape to pin is the SRP-blocked
+    edge plan it hands the solver."""
+    from chapterhousedb_spark.operators import embedding_near_dup_pairs
+    from chapterhousedb_spark.workload.registry import fan_out, load
+
+    embs = fan_out(load(spark, SF_SMOKE, "embeddings"), key="vec_id")
+    plan = physical_plan(embedding_near_dup_pairs(embs, threshold=0.45, planes=6))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

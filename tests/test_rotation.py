@@ -194,3 +194,28 @@ def test_fan_out_memoizes_result_per_frame_and_key(spark):
     assert f1.count() == d.count()
     # load() memoizes too, so an independent load hits the same memo
     assert fan_out(load(spark, sf, "documents")) is f1
+
+
+def test_load_memo_hit_repins_events_conf(spark):
+    """ADVICE r16: a memo hit must still pin the events read conf — a
+    session whose timezone moved after the first load gets UTC back."""
+    from chapterhousedb_spark.workload.registry import load
+
+    sf = "/root/testdata/sf0.001"
+    load(spark, sf, "events")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    load(spark, sf, "events")
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_fan_out_memo_holds_every_key(spark):
+    """ADVICE r16: alternating fan-out keys on one frame each keep their
+    memoized result, instead of evicting each other from one slot."""
+    from chapterhousedb_spark.workload.registry import fan_out, load
+
+    d = load(spark, "/root/testdata/sf0.001", "documents")
+    by_id, by_text = fan_out(d), fan_out(d, key="text")
+    assert by_id is not d and by_text is not d  # both repartitioned
+    for _ in range(2):
+        assert fan_out(d) is by_id
+        assert fan_out(d, key="text") is by_text
